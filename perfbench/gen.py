@@ -32,11 +32,11 @@ class PaymentGen:
     key exists), receivers uniform over a disjoint pool (they never send,
     so a lookup for one must return None)."""
 
-    def __init__(self, seed: int, n_accounts: int = 500, zipf_s: float = 1.1):
+    def __init__(self, seed: int, accounts: int, zipf_s: float):
         self._rng = random.Random(seed)
-        self.senders = [f"ACC-{i:04d}" for i in range(n_accounts)]
-        self.receivers = [f"DEF-{i:04d}" for i in range(n_accounts)]
-        weights = [1.0 / (i + 1) ** zipf_s for i in range(n_accounts)]
+        self.senders = [f"ACC-{i:04d}" for i in range(accounts)]
+        self.receivers = [f"DEF-{i:04d}" for i in range(accounts)]
+        weights = [1.0 / (i + 1) ** zipf_s for i in range(accounts)]
         total = sum(weights)
         self._cum = np.cumsum([w / total for w in weights]).tolist()
 
@@ -74,12 +74,22 @@ class PaymentGen:
 def publish(directory: str, name: str, payments: list[dict]) -> str:
     """Write one JSON-lines file atomically: the file source skips names
     that start with '.', so it never sees the file half written."""
-    tmp = os.path.join(directory, "." + name + ".tmp")
-    final = os.path.join(directory, name)
-    with open(tmp, "w") as f:
-        f.write("".join(json.dumps(p, separators=(",", ":")) + "\n" for p in payments))
-    os.rename(tmp, final)
-    return final
+    return publish_many(directory, [(name, payments)])[0]
+
+
+def publish_many(directory: str, files: list[tuple[str, list[dict]]]) -> list[str]:
+    """Publish several files at once: all are written under hidden names
+    first and renamed together, so one listing of the source sees them
+    all (a backlog, not a trickle)."""
+    moves = []
+    for name, payments in files:
+        tmp = os.path.join(directory, "." + name + ".tmp")
+        with open(tmp, "w") as f:
+            f.write("".join(json.dumps(p, separators=(",", ":")) + "\n" for p in payments))
+        moves.append((tmp, os.path.join(directory, name)))
+    for tmp, final in moves:
+        os.rename(tmp, final)
+    return [final for _, final in moves]
 
 
 # ---------------------------------------------------------------------------

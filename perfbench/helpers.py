@@ -31,10 +31,12 @@ def percentile(values, p: float) -> float:
     return ordered[rank - 1]
 
 
-def percentile_supported(p: float, n: int, beyond: int = 10) -> bool:
-    """True when n samples leave at least ``beyond`` of them above the
-    p-th percentile, e.g. p90 needs 100 samples."""
-    return n * (1.0 - p / 100.0) >= beyond - 1e-9
+def tail_percentile(n: int, beyond: int = 10) -> float:
+    """The highest percentile that leaves at least ``beyond`` of n samples
+    above it: p90 for 100 samples, p80 for 50."""
+    if n <= beyond:
+        raise ValueError(f"{n} samples leave none beyond {beyond}")
+    return 100.0 * (n - beyond) / n
 
 
 def geomean(values) -> float:

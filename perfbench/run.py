@@ -17,6 +17,7 @@ breakdown instead of the end-to-end metrics.
 from __future__ import annotations
 
 import argparse
+import gc
 import json
 import os
 import resource
@@ -28,6 +29,9 @@ import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
+CPUS = 4
+MASTER = f"local[{CPUS}]"
+DRIVER_MEMORY = "2g"
 
 
 def _parse_args(argv, spec: dict):
@@ -40,22 +44,49 @@ def _parse_args(argv, spec: dict):
     return ap.parse_args(argv)
 
 
-def _host_facts(cfg: dict, seed: int, graft_cpus: str | None, spark_version: str) -> dict:
+def _host_facts(seed: int, graft_cpus: str | None, spark_version: str) -> dict:
     commit = None
     if os.path.isdir(os.path.join(ROOT, ".git")):
         commit = subprocess.run(["git", "rev-parse", "HEAD"], cwd=ROOT, capture_output=True,
                                 text=True, timeout=10).stdout.strip() or None
     return {"nproc": len(os.sched_getaffinity(0)), "SPARK_GRAFT_CPUS": graft_cpus,
-            "master": cfg["master"], "spark": spark_version,
+            "master": MASTER, "spark": spark_version,
             "commit": commit, "seed": seed}
 
 
-def _vm_hwm_kb(pid: int) -> int:
-    with open(f"/proc/{pid}/status") as f:
-        for line in f:
-            if line.startswith("VmHWM:"):
-                return int(line.split()[1])
-    return 0
+def _jvm_memory_mb(spark) -> dict:
+    """What the JVM holds, in MB, read from its memory MXBeans: the heap
+    still live after a full GC at the end of the run, and the peak of each
+    non-heap pool (metaspace, code cache). The heap's own peak is left
+    out: with a fixed heap it tracks when the collector ran, not what the
+    program kept."""
+    jvm = spark.sparkContext._jvm
+    mf = jvm.java.lang.management.ManagementFactory
+    gc.collect()  # release the JVM objects that dead Python proxies still pin
+    jvm.java.lang.System.gc()
+    # the ContextCleaner drops the broadcast and shuffle blocks of what that
+    # collected on its own thread; give it time, then collect what it freed
+    time.sleep(1.0)
+    jvm.java.lang.System.gc()
+    out = {"live_heap": mf.getMemoryMXBean().getHeapMemoryUsage().getUsed() / 2**20}
+    for pool in mf.getMemoryPoolMXBeans():
+        if str(pool.getType()) == "Non-heap memory":
+            out[pool.getName()] = pool.getPeakUsage().getUsed() / 2**20
+    return out
+
+
+def _gc_s(spark) -> dict:
+    """Collections and seconds spent in them so far, per JVM collector."""
+    mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    return {c.getName(): [c.getCollectionCount(), c.getCollectionTime() / 1000.0]
+            for c in mf.getGarbageCollectorMXBeans()}
+
+
+def _cpu_jiffies() -> list[int]:
+    """The host's cumulative CPU times (/proc/stat: user, nice, system,
+    idle, iowait, irq, softirq, steal), in clock ticks."""
+    with open("/proc/stat") as f:
+        return [int(x) for x in f.readline().split()[1:9]]
 
 
 def _stop(spark) -> None:
@@ -84,7 +115,8 @@ def _per_layer(res, groups: dict, names) -> dict:
 
     m = {name: 0.0 for name in names}
     med = statistics.median
-    progress = res.raw.get("progress", [])
+    # idle triggers (no input, no addBatch) would add zeros to the medians
+    progress = [p for p in res.raw.get("progress", []) if p.get("numInputRows", 0) > 0]
     if progress:
         dur = lambda k: [p["durationMs"].get(k, 0) for p in progress]  # noqa: E731
         m["source.latest_offset_ms_p50"] = med(dur("latestOffset"))
@@ -164,7 +196,7 @@ def main(argv=None) -> int:
     os.makedirs(tmp)
     # everything the run writes, the JVM and its Python workers included,
     # stays inside the checkout
-    os.environ.update({"SPARK_GRAFT_CPUS": "4", "SPARK_DRIVER_MEM": cfg["driver_memory"],
+    os.environ.update({"SPARK_GRAFT_CPUS": str(CPUS), "SPARK_DRIVER_MEM": DRIVER_MEMORY,
                        "TMPDIR": tmp, "SPARK_LOCAL_DIRS": os.path.join(work, "spark-local"),
                        # JVMs otherwise keep perf counters under /tmp
                        "JAVA_TOOL_OPTIONS": "-XX:-UsePerfData"})
@@ -186,10 +218,10 @@ def _run(args, spec, cfg, graft_cpus, work, tmp) -> int:
     conf = {
         "spark.ui.showConsoleProgress": "false",
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
-        # a fixed, pre-touched heap: peak RSS then moves with what the
-        # program adds beyond its heap, not with when the GC grew it
+        # a fixed, pre-touched heap, so heap growth and first-touch page
+        # faults do not land in the measured phases
         "spark.driver.extraJavaOptions":
-            f"-Djava.io.tmpdir={tmp} -Xms{cfg['driver_memory']} -XX:+AlwaysPreTouch",
+            f"-Djava.io.tmpdir={tmp} -Xms{DRIVER_MEMORY} -XX:+AlwaysPreTouch",
         "spark.sql.streaming.numRecentProgressUpdates": "1000",
     }
     if args.trace:
@@ -198,22 +230,33 @@ def _run(args, spec, cfg, graft_cpus, work, tmp) -> int:
                      "spark.eventLog.compress": "false",
                      "spark.eventLog.rolling.enabled": "false"})
     t = time.perf_counter()
-    spark = get_spark(app_name=f"perfbench-{args.workload}", master=cfg["master"],
+    spark = get_spark(app_name=f"perfbench-{args.workload}", master=MASTER,
                       shuffle_partitions=4, extra_conf=conf)
     session_s = time.perf_counter() - t
     try:
         spark_version = spark.version
-        jvm_pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
+        cpu0 = _cpu_jiffies()
         res = WORKLOADS[args.workload](spark, work, cfg, args.seed, args.seconds)
-        peak_kb = _vm_hwm_kb(jvm_pid) + resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
+        cpu = [b - a for a, b in zip(cpu0, _cpu_jiffies())]
+        gc_s = _gc_s(spark)
+        pools = _jvm_memory_mb(spark)
+        python_mb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024.0
     finally:
         _stop(spark)
 
-    e2e = {"setup_s": session_s + res.setup_s, "peak_rss_mb": peak_kb / 1024.0, **res.e2e}
+    e2e = {"setup_s": session_s + res.setup_s,
+           "memory_mb": sum(pools.values()) + python_mb, **res.e2e}
     report = {
         "workload": args.workload, "trace": args.trace,
-        "host": _host_facts(cfg, args.seed, graft_cpus, spark_version),
-        "end_to_end": e2e, "session_s": session_s, **res.report,
+        "host": _host_facts(args.seed, graft_cpus, spark_version),
+        "end_to_end": e2e, "session_s": session_s, "memory_pools_mb": pools,
+        "python_rss_mb": python_mb, "gc": gc_s,
+        # host CPU shares over the workload: busy, idle and stolen by the
+        # hypervisor; a high steal share marks a run slowed from outside
+        "host_cpu_share": {k: v / sum(cpu) for k, v in
+                           (("busy", sum(cpu[:3]) + sum(cpu[5:7])), ("idle", sum(cpu[3:5])),
+                            ("steal", cpu[7]))},
+        **res.report,
         "failed_ratio": res.failed / res.attempted if res.attempted else 1.0,
         "failed_base": res.attempted, "errors": res.errors[:10],
     }

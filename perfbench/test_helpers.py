@@ -14,7 +14,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from gen import PaymentGen  # noqa: E402
+from gen import PaymentGen, publish_many  # noqa: E402
 from helpers import (  # noqa: E402
     Reference,
     batch_commit_times,
@@ -23,7 +23,7 @@ from helpers import (  # noqa: E402
     java_round,
     parse_progress_time,
     percentile,
-    percentile_supported,
+    tail_percentile,
     read_event_log,
     route,
     union_length,
@@ -49,13 +49,15 @@ def test_percentile_is_nearest_rank():
         percentile([], 50)
 
 
-def test_sample_count_rule_needs_ten_samples_beyond():
-    assert percentile_supported(90, 100)
-    assert not percentile_supported(90, 99)
-    assert percentile_supported(50, 20)
-    assert not percentile_supported(50, 19)
-    assert percentile_supported(99, 1000)
-    assert not percentile_supported(99, 999)
+def test_tail_percentile_leaves_ten_samples_beyond():
+    assert tail_percentile(100) == 90
+    assert tail_percentile(50) == 80
+    assert tail_percentile(1000) == 99
+    for n in (11, 37, 50, 101):
+        values = list(range(1, n + 1))
+        assert sum(v > percentile(values, tail_percentile(n)) for v in values) == 10
+    with pytest.raises(ValueError):
+        tail_percentile(10)
 
 
 # -- payment reference ------------------------------------------------------
@@ -98,14 +100,23 @@ def test_java_round_rounds_half_up():
 
 
 def test_payment_generator_is_seeded_and_skewed():
-    a = PaymentGen(7).payments(2000)
-    assert a == PaymentGen(7).payments(2000)
-    assert a != PaymentGen(8).payments(2000)
+    a = PaymentGen(7, 500, 1.1).payments(2000)
+    assert a == PaymentGen(7, 500, 1.1).payments(2000)
+    assert a != PaymentGen(8, 500, 1.1).payments(2000)
     heavy = sum(p["fromAccount"] == "ACC-0000" for p in a) / len(a)
     assert heavy > 0.1
     assert all(10 <= p["amount"] <= 10000 for p in a)
     assert {p["rails"] for p in a} == {"BANK_RAILS_FOO", "BANK_RAILS_BAR", "BANK_RAILS_XXX"}
     assert {p["currency"] for p in a} == {"GBP", "USD", "EUR"}
+
+
+
+def test_publish_many_leaves_only_the_named_files(tmp_path):
+    pays = PaymentGen(3, 10, 1.1).payments(4)
+    paths = publish_many(str(tmp_path), [("a.json", pays[:2]), ("b.json", pays[2:])])
+    assert sorted(os.listdir(tmp_path)) == ["a.json", "b.json"]
+    with open(paths[1]) as f:
+        assert [json.loads(line) for line in f] == pays[2:]
 
 
 # -- file source log --------------------------------------------------------

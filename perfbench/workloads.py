@@ -16,7 +16,7 @@ from dataclasses import dataclass, field
 
 import pyarrow.parquet as pq
 
-from gen import PaymentGen, batch_tables, publish, write_tables
+from gen import PaymentGen, batch_tables, publish, publish_many, write_tables
 from helpers import (
     Reference,
     batch_commit_times,
@@ -24,8 +24,10 @@ from helpers import (
     file_batches,
     geomean,
     percentile,
-    percentile_supported,
+    tail_percentile,
 )
+
+SETUP_REPS = 3  # stagings per run; setup_s takes their median
 
 
 @dataclass
@@ -118,12 +120,12 @@ def payment_stream(spark, work: str, cfg: dict, seed: int, seconds: int) -> Resu
 
     c = cfg["payment_stream"]
     res = Result()
-    gen = PaymentGen(seed, cfg["payments"]["accounts"], cfg["payments"]["zipf_s"])
+    gen = PaymentGen(seed, **cfg["payments"])
     pick = random.Random(seed + 1)
     ref = Reference()
 
     stage, view_init = [], []
-    for rep in range(cfg["setup_reps"]):
+    for rep in range(SETUP_REPS):
         src, out, ck = _stream_dirs(work, f"stage{rep}")
         warm = gen.payments(c["payments_per_file"])
         t = time.perf_counter()
@@ -137,21 +139,30 @@ def payment_stream(spark, work: str, cfg: dict, seed: int, seconds: int) -> Resu
         _job_group(spark, f"warm_lookup:{rep}")
         view.get_balance(gen.senders[0])
         stage.append(time.perf_counter() - t)
-        if rep < cfg["setup_reps"] - 1:
+        if rep < SETUP_REPS - 1:
             query.stop()
     ref.add(warm)
-    # more single-file triggers on the kept query, so JIT compilation of the
-    # micro-batch path is done before the clock starts
-    t = time.perf_counter()
-    for k in range(c["warmup_triggers"]):
-        warm = gen.payments(c["payments_per_file"])
-        ref.add(warm)
-        publish(src, f"warmup{k}.json", warm)
-        query.processAllAvailable()
-    res.setup_s = statistics.median(stage) + time.perf_counter() - t
-    first = c["warmup_triggers"] + 1  # first measured batch id
+    res.setup_s = statistics.median(stage)
 
-    # 1. open loop: files are due on a fixed schedule whatever the stream does
+    # 1. capacity: a backlog of files published at once, drained by
+    # processAllAvailable. The first drain finishes warming the micro-batch
+    # path (JIT) and counts as set-up; capacity is payments per second of
+    # the median of the others.
+    drain_s = []
+    for rep in range(1 + c["capacity_reps"]):
+        backlog = [(f"c{rep}-{k:03d}.json", gen.payments(c["payments_per_file"]))
+                   for k in range(c["capacity_files"])]
+        for _, pays in backlog:
+            ref.add(pays)
+        t = time.perf_counter()
+        publish_many(src, backlog)
+        query.processAllAvailable()
+        drain_s.append(time.perf_counter() - t)
+    res.setup_s += drain_s.pop(0)
+    capacity = c["capacity_files"] * c["payments_per_file"] / statistics.median(drain_s)
+    first = max(file_batches(os.path.join(ck, "sources", "0")).values()) + 1
+
+    # 2. open loop: files are due on a fixed schedule whatever the stream does
     interval = c["file_interval_s"]
     n_files = max(1, round(seconds / interval))
     files = [(f"p{k:06d}.json", gen.payments(c["payments_per_file"])) for k in range(n_files)]
@@ -175,7 +186,7 @@ def payment_stream(spark, work: str, cfg: dict, seed: int, seconds: int) -> Resu
     query.processAllAvailable()
     store = _store_facts(out)
 
-    # 2. one client: lookups on the full log, compaction, lookups again
+    # 3. one client: lookups on the full log, compaction, lookups again
     lookups: list[tuple[str, float]] = []  # (phase, ms)
 
     def lookup(phase: str) -> None:
@@ -226,17 +237,25 @@ def payment_stream(spark, work: str, cfg: dict, seed: int, seconds: int) -> Resu
     compacted = [ms for phase, ms in lookups if phase == "compacted"]
     res.e2e = {
         "latency_ms": percentile(latency, 50),
-        "slow_latency_ms": percentile(latency, 90),
-        "throughput_per_s": delivered,
+        # the highest percentile with ten files beyond it
+        "slow_latency_ms": percentile(latency, tail_percentile(len(latency))),
+        "throughput_per_s": capacity,
         "job_s": serving_s,
     }
     res.report = {
         "stream_latency_p50_ms": res.e2e["latency_ms"],
-        "stream_latency_p90_ms": res.e2e["slow_latency_ms"],
+        "stream_latency_tail_ms": res.e2e["slow_latency_ms"],
+        "stream_latency_tail_pct": tail_percentile(len(latency)),
         "stream_latency_files": len(latency),
-        "stream_latency_p90_supported": percentile_supported(90, len(latency)),
         "stream_delivered_events_per_s": delivered,
         "stream_offered_events_per_s": c["payments_per_file"] / interval,
+        "stream_capacity_events_per_s": capacity,
+        "capacity_drain_s": drain_s,
+        # batches per drain: more than one means the source listed the
+        # backlog while it was being renamed in
+        "capacity_drain_batches": [
+            len({b for n, b in batch_of.items() if n.startswith(f"c{rep}-")})
+            for rep in range(1, 1 + c["capacity_reps"])],
         "micro_batches": len(measured),
         "lookup_full_log_p50_ms": percentile(full_log, 50),
         "lookup_compacted_p50_ms": percentile(compacted, 50),
@@ -244,8 +263,12 @@ def payment_stream(spark, work: str, cfg: dict, seed: int, seconds: int) -> Resu
         "compact_s": compact_s,
         "serving_s": serving_s,
         "lookup_ms": [[phase, ms] for phase, ms in lookups],
-        "batch_ms": [p["durationMs"].get("triggerExecution") for p in progress
-                     if int(p["batchId"]) in measured],
+        # per measured batch: rows, then ms in trigger, listing, addBatch, commit
+        "batch_ms": [[p["numInputRows"]] + [
+            sum(p["durationMs"].get(k, 0) for k in ks) for ks in
+            (("triggerExecution",), ("latestOffset",), ("addBatch",),
+             ("walCommit", "commitOffsets"))]
+            for p in progress if p["numInputRows"] > 0 and int(p["batchId"]) in measured],
     }
     res.raw = {"progress": [p for p in progress if int(p["batchId"]) >= first],
                "lateness_ms": [(sent[n] - due[n]) * 1000.0 for n in due], "store": store,
@@ -269,7 +292,7 @@ def batch_queries(spark, work: str, cfg: dict, seed: int, seconds: int) -> Resul
         oracle = json.load(f)
     tables = batch_tables(c["data_seed"], c["scale"])
     stage = []
-    for rep in range(cfg["setup_reps"]):
+    for rep in range(SETUP_REPS):
         sf = _fresh(os.path.join(work, f"tables{rep}"))
         t = time.perf_counter()
         write_tables(tables, sf)
@@ -292,7 +315,8 @@ def batch_queries(spark, work: str, cfg: dict, seed: int, seconds: int) -> Resul
     samples: dict[str, list[tuple[float, float]]] = {q: [] for q in order}
     start = time.perf_counter()
     passes = 0
-    while passes == 0 or time.perf_counter() - start < seconds:
+    # whole passes while another one still fits in the window (at least one)
+    while passes == 0 or (time.perf_counter() - start) * (passes + 1) / passes <= seconds:
         for name in order:
             spark.catalog.clearCache()
             _job_group(spark, f"run:{passes}:{name}:build")
@@ -303,6 +327,10 @@ def batch_queries(spark, work: str, cfg: dict, seed: int, seconds: int) -> Resul
             df.write.format("noop").mode("overwrite").save()
             samples[name].append((t1 - t0, time.perf_counter() - t1))
         passes += 1
+    # drop what the last query left, so the live heap measured after the
+    # run does not depend on which query the seed put last
+    del df, pdf
+    spark.catalog.clearCache()
 
     per_query = {q: statistics.median(b + e for b, e in s) for q, s in samples.items()}
     total = sum(per_query.values())
