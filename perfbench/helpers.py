@@ -39,6 +39,58 @@ def tail_percentile(n: int, beyond: int = 10) -> float:
     return 100.0 * (n - beyond) / n
 
 
+# the JVM's JIT compiler threads, by their (truncated) /proc names
+JIT_THREADS = ("C1 CompilerThre", "C2 CompilerThre")
+
+
+def _proc_stat(path: str) -> tuple[str, list[str]]:
+    """The command name and the fields after it of a /proc stat file."""
+    with open(path) as f:
+        text = f.read()
+    return text[text.index("(") + 1: text.rindex(")")], text.rsplit(")", 1)[1].split()
+
+
+def work_cpu(root: int, jvm: int | None = None) -> tuple[float, float]:
+    """User and system CPU seconds that process ``root`` and every live
+    descendant have used so far, children they already reaped included,
+    read from ``/proc``; less what the JIT compiler threads of process
+    ``jvm`` used, which compile on their own schedule. Time the
+    hypervisor stole is not charged to a process, and time spent waiting
+    for a CPU is not CPU time."""
+    stats = {}
+    for name in os.listdir("/proc"):
+        if not name.isdigit():
+            continue
+        try:
+            _, fields = _proc_stat(f"/proc/{name}/stat")
+        except OSError:
+            continue  # exited while listed
+        # after the command: state, ppid, ... utime, stime, cutime, cstime
+        stats[int(name)] = (int(fields[1]), int(fields[11]) + int(fields[13]),
+                            int(fields[12]) + int(fields[14]))
+    children = defaultdict(list)
+    for pid, (ppid, _, _) in stats.items():
+        children[ppid].append(pid)
+    user = system = 0
+    todo = [root]
+    while todo:
+        pid = todo.pop()
+        _, u, s = stats.get(pid, (0, 0, 0))
+        user, system = user + u, system + s
+        todo.extend(children[pid])
+    if jvm is not None:
+        for tid in os.listdir(f"/proc/{jvm}/task"):
+            try:
+                comm, fields = _proc_stat(f"/proc/{jvm}/task/{tid}/stat")
+            except OSError:
+                continue
+            if comm in JIT_THREADS:
+                user -= int(fields[11])
+                system -= int(fields[12])
+    tick = os.sysconf("SC_CLK_TCK")
+    return user / tick, system / tick
+
+
 def geomean(values) -> float:
     return math.exp(sum(math.log(v) for v in values) / len(values))
 

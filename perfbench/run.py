@@ -156,33 +156,38 @@ def _per_layer(res, groups: dict, names) -> dict:
         m["compact.jobs"] = groups.get("compact", {}).get("jobs", 0)
     samples = res.raw.get("samples")
     if samples:
-        passes = res.raw["passes"]
+        n = {q: len(s) for q, s in samples.items()}
         for q, s in samples.items():
             mod = res.raw["modules"][q].split(".")[-1]
             m[f"batch.{mod}_s"] += med(b + e for b, e in s)
             m["batch.build_s"] += med(b for b, _ in s)
             m["batch.exec_s"] += med(e for _, e in s)
-        run = {k: g for k, g in groups.items() if k.startswith("run:")}
-        for g in run.values():
-            m["batch.jobs"] += g["jobs"] / passes
-            m["batch.stages"] += g["stages"] / passes
-            m["batch.task_s"] += g["task_ms"] / 1000.0 / passes
-            m["batch.cpu_s"] += g["cpu_ns"] / 1e9 / passes
-            m["batch.shuffle_read_bytes"] += g["shuffle_read_bytes"] / passes
-            m["batch.shuffle_write_bytes"] += g["shuffle_write_bytes"] / passes
-            m["batch.spill_bytes"] += g["spill_bytes"] / passes
-        busy_ms = 0.0
-        for p in range(passes):
-            for q in samples:
-                busy_ms += union_length(
-                    run.get(f"run:{p}:{q}:build", {}).get("intervals", [])
-                    + run.get(f"run:{p}:{q}:exec", {}).get("intervals", []))
-        wall_s = sum(b + e for s in samples.values() for b, e in s)
-        m["batch.driver_s"] = max(0.0, wall_s - busy_ms / 1000.0) / passes
+        # per-query means over its samples, summed over the queries: one pass
+        busy_ms = {q: 0.0 for q in samples}
+        for k, g in groups.items():
+            if not k.startswith("run:"):
+                continue
+            q = k.split(":")[2]
+            m["batch.jobs"] += g["jobs"] / n[q]
+            m["batch.stages"] += g["stages"] / n[q]
+            m["batch.task_s"] += g["task_ms"] / 1000.0 / n[q]
+            m["batch.cpu_s"] += g["cpu_ns"] / 1e9 / n[q]
+            m["batch.shuffle_read_bytes"] += g["shuffle_read_bytes"] / n[q]
+            m["batch.shuffle_write_bytes"] += g["shuffle_write_bytes"] / n[q]
+            m["batch.spill_bytes"] += g["spill_bytes"] / n[q]
+        for q in samples:
+            for p in range(n[q]):
+                busy_ms[q] += union_length(
+                    groups.get(f"run:{p}:{q}:build", {}).get("intervals", [])
+                    + groups.get(f"run:{p}:{q}:exec", {}).get("intervals", []))
+        m["batch.driver_s"] = sum(
+            max(0.0, sum(b + e for b, e in samples[q]) - busy_ms[q] / 1000.0) / n[q]
+            for q in samples)
     return m
 
 
 def main(argv=None) -> int:
+    started = time.perf_counter()
     # BENCHMARK.json names the metrics and their units; a run reports exactly those
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         spec = json.load(f)
@@ -202,7 +207,7 @@ def main(argv=None) -> int:
                        "JAVA_TOOL_OPTIONS": "-XX:-UsePerfData"})
     sys.path[:0] = [ROOT, HERE]
     try:
-        return _run(args, spec, cfg, graft_cpus, work, tmp)
+        return _run(args, spec, cfg, graft_cpus, work, tmp, started)
     finally:
         shutil.rmtree(work, ignore_errors=True)
         parent = os.path.dirname(work)
@@ -210,7 +215,7 @@ def main(argv=None) -> int:
             os.rmdir(parent)
 
 
-def _run(args, spec, cfg, graft_cpus, work, tmp) -> int:
+def _run(args, spec, cfg, graft_cpus, work, tmp, started) -> int:
     from kafka_streams_spark import get_spark
     from workloads import WORKLOADS
 
@@ -219,9 +224,11 @@ def _run(args, spec, cfg, graft_cpus, work, tmp) -> int:
         "spark.ui.showConsoleProgress": "false",
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
         # a fixed, pre-touched heap, so heap growth and first-touch page
-        # faults do not land in the measured phases
+        # faults do not land in the measured phases; JIT compiler threads
+        # that never exit, so their CPU can be left out of the CPU metrics
         "spark.driver.extraJavaOptions":
-            f"-Djava.io.tmpdir={tmp} -Xms{DRIVER_MEMORY} -XX:+AlwaysPreTouch",
+            f"-Djava.io.tmpdir={tmp} -Xms{DRIVER_MEMORY} -XX:+AlwaysPreTouch"
+            " -XX:-UseDynamicNumberOfCompilerThreads",
         "spark.sql.streaming.numRecentProgressUpdates": "1000",
     }
     if args.trace:
@@ -249,7 +256,9 @@ def _run(args, spec, cfg, graft_cpus, work, tmp) -> int:
     report = {
         "workload": args.workload, "trace": args.trace,
         "host": _host_facts(args.seed, graft_cpus, spark_version),
-        "end_to_end": e2e, "session_s": session_s, "memory_pools_mb": pools,
+        "end_to_end": e2e, "session_s": session_s,
+        "run_s": time.perf_counter() - started,  # to here; the JVM has stopped
+        "memory_pools_mb": pools,
         "python_rss_mb": python_mb, "gc": gc_s,
         # host CPU shares over the workload: busy, idle and stolen by the
         # hypervisor; a high steal share marks a run slowed from outside

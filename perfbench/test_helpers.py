@@ -27,6 +27,7 @@ from helpers import (  # noqa: E402
     read_event_log,
     route,
     union_length,
+    work_cpu,
 )
 
 
@@ -215,3 +216,31 @@ def test_read_event_log_groups_by_batch_and_job_group():
     assert b["spill_bytes"] == 18
     assert union_length(b["intervals"]) == 100
     assert groups["lookup:0"]["jobs"] == 1 and groups["lookup:0"]["task_ms"] == 40
+
+
+# -- CPU meter ----------------------------------------------------------------
+
+
+def test_work_cpu_counts_live_children_and_not_sleep():
+    import subprocess
+    import time
+
+    me = os.getpid()
+    t = sum(work_cpu(me))
+    time.sleep(0.3)
+    assert sum(work_cpu(me)) - t < 0.1
+    burn = ("import sys, time\n"
+            "t = time.process_time()\n"
+            "while time.process_time() - t < 0.3:\n"
+            "    pass\n"
+            "sys.stdout.write('x'); sys.stdout.flush(); sys.stdin.read()\n")
+    before = sum(work_cpu(me))
+    child = subprocess.Popen([sys.executable, "-c", burn],
+                             stdin=subprocess.PIPE, stdout=subprocess.PIPE)
+    try:
+        child.stdout.read(1)  # the child has burned 0.3 s and still runs
+        during = sum(work_cpu(me))
+    finally:
+        child.stdin.close()
+        child.wait()
+    assert during - before >= 0.25
